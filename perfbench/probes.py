@@ -350,6 +350,7 @@ class VisibilityPoller:
         self.counts = {"target": [0] * len(expected), "log": [0] * len(expected)}
         self.visible_at: list[float | None] = [None] * len(expected)
         self.max_batch_id = -1
+        self.cpu_s = 0.0  # this thread's CPU time: the benchmark's, not the engine's
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._run, daemon=True)
         self.errors: list[str] = []
@@ -358,8 +359,9 @@ class VisibilityPoller:
         self._thread.start()
 
     def stop(self) -> None:
+        """Stop after one last poll, made by the poller thread itself."""
         self._stop.set()
-        self._thread.join(timeout=10)
+        self._thread.join(timeout=30)
 
     def all_visible(self) -> bool:
         return all(v is not None for v, n in zip(self.visible_at, self.expected) if n)
@@ -405,11 +407,15 @@ class VisibilityPoller:
                 self.visible_at[i] = now
 
     def _run(self) -> None:
-        while not self._stop.is_set():
+        while True:
+            stopping = self._stop.is_set()
             try:
                 self.poll()
             except Exception as e:  # noqa: BLE001 - a poll error is recorded, polling goes on
                 self.errors.append(repr(e))
+            self.cpu_s = time.thread_time()
+            if stopping:
+                return
             self._stop.wait(self.interval_s)
 
 
@@ -432,19 +438,42 @@ def _children() -> dict[int, list[int]]:
     return kids
 
 
-def tree_rss_mb(root_pid: int) -> float:
-    """Resident memory of a process and all its descendants, in MB."""
+def _tree(root_pid: int) -> list[int]:
+    """A process and all its descendants."""
     kids = _children()
-    total, todo = 0, [root_pid]
+    out, todo = [], [root_pid]
     while todo:
         pid = todo.pop()
+        out.append(pid)
         todo += kids.get(pid, [])
+    return out
+
+
+def tree_rss_mb(root_pid: int) -> float:
+    """Resident memory of a process and all its descendants, in MB."""
+    total = 0
+    for pid in _tree(root_pid):
         try:
             with open(f"/proc/{pid}/statm") as f:
                 total += int(f.read().split()[1]) * os.sysconf("SC_PAGE_SIZE")
         except (OSError, IndexError, ValueError):
             continue
     return total / 1e6
+
+
+def tree_cpu_s(root_pid: int) -> float:
+    """CPU seconds (user + system) of a process and all its descendants,
+    including the children they have already reaped (exited Python
+    workers). Time the hypervisor stole is not in it."""
+    ticks = 0
+    for pid in _tree(root_pid):
+        try:
+            with open(f"/proc/{pid}/stat") as f:
+                fields = f.read().rsplit(")", 1)[1].split()
+            ticks += sum(int(v) for v in fields[11:15])  # utime stime cutime cstime
+        except (OSError, IndexError, ValueError):
+            continue
+    return ticks / os.sysconf("SC_CLK_TCK")
 
 
 class HostSampler:
@@ -456,7 +485,8 @@ class HostSampler:
     def __init__(self, pid: int, interval_s: float = 1.0):
         self.pid, self.interval_s = pid, interval_s
         self.peak_mb = 0.0
-        self.other_jvms: set[int] = set()
+        self.other_jvms: dict[int, str] = {}
+        self.cpu_s = 0.0  # this thread's CPU time
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._run, daemon=True)
 
@@ -471,23 +501,47 @@ class HostSampler:
     def _run(self) -> None:
         while not self._stop.is_set():
             self.peak_mb = max(self.peak_mb, tree_rss_mb(self.pid))
-            self.other_jvms.update(spark_jvms({self.pid}))
+            self.other_jvms.update(spark_jvms(self.pid))
+            self.cpu_s = time.thread_time()
             self._stop.wait(self.interval_s)
 
 
-def spark_jvms(exclude: set[int]) -> list[int]:
-    """Pids of Spark JVMs on this host other than ``exclude``."""
-    out = []
+def _ours(pid: int, root: int) -> bool:
+    """Whether ``pid`` is ``root`` or runs under it. A process that is gone
+    by now counts as ours: it lived for milliseconds, as a child does
+    between fork and exec."""
+    while pid > 1:
+        if pid == root:
+            return True
+        try:
+            with open(f"/proc/{pid}/stat") as f:
+                pid = int(f.read().rsplit(")", 1)[1].split()[1])
+        except (OSError, IndexError, ValueError):
+            return True
+    return False
+
+
+def spark_jvms(own: int) -> dict[int, str]:
+    """Spark JVMs on this host other than ``own`` and the processes under
+    it: pid -> main class. A child the JVM forks (a Python worker, a shell
+    helper) carries the JVM's command line until it execs, so ancestry
+    decides, not the command line alone."""
+    out = {}
     for d in os.listdir("/proc"):
-        if not d.isdigit() or int(d) in exclude:
+        if not d.isdigit():
             continue
         try:
             with open(f"/proc/{d}/cmdline", "rb") as f:
                 cmd = f.read()
         except OSError:
             continue
-        if b"java" in cmd and b"org.apache.spark" in cmd:
-            out.append(int(d))
+        # the program itself must be java: a shell or a grep that merely
+        # names Spark is not a JVM
+        args = cmd.split(b"\0")
+        if (args[0].endswith(b"java") and b"org.apache.spark" in cmd
+                and not _ours(int(d), own)):
+            out[int(d)] = next((a.decode(errors="replace") for a in args
+                                if a.startswith(b"org.apache.spark")), "?")
     return out
 
 

@@ -13,7 +13,7 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from probes import Tracer, parse_metric_value, pct, union_s  # noqa: E402
+from probes import Tracer, parse_metric_value, pct, spark_jvms, union_s  # noqa: E402
 
 MULTI = (
     "total (min, med, max (stageId: taskId))\n"
@@ -128,3 +128,28 @@ def test_inputs_depend_only_on_the_seed(tmp_path):
     gen.write_catchup(tmp_path / "b", 9, 1_000, 3, 100)
     for f in sorted((tmp_path / "a" / "feed").iterdir()):
         assert f.read_bytes() == (tmp_path / "b" / "feed" / f.name).read_bytes()
+
+
+def test_a_jvm_is_other_only_when_it_runs_outside_our_tree(tmp_path):
+    # a child that still shows a Spark JVM's command line (as a fork of the
+    # driver JVM does until it execs) is ours, not a contending JVM
+    import os
+    import subprocess
+    import time
+
+    java = tmp_path / "java"
+    java.symlink_to(sys.executable)
+    child = subprocess.Popen([str(java), "-c", "import time; time.sleep(30)",
+                              "org.apache.spark.deploy.SparkSubmit"])
+    try:
+        for _ in range(100):  # until the child's command line is in place
+            with open(f"/proc/{child.pid}/cmdline", "rb") as f:
+                if b"org.apache.spark" in f.read():
+                    break
+            time.sleep(0.05)
+        assert child.pid not in spark_jvms(os.getpid())
+        others = spark_jvms(2**22 + 1)  # no such process: nothing is under it
+        assert others.get(child.pid) == "org.apache.spark.deploy.SparkSubmit"
+    finally:
+        child.kill()
+        child.wait()
