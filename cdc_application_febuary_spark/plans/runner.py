@@ -23,6 +23,7 @@ from ..streaming.changelog_stream import (
     file_source,
     start_changelog_stream,
 )
+from ..streaming.replay import await_replay
 from .pipeline import FullLoadResult, run_full_load
 from .snapshot import StreamStartPlan, resolve_snapshot_mode
 
@@ -158,11 +159,13 @@ def run_file_pipeline(
     work_root: str,
     engine: str = "postgresql",
     mode: str = "full_load_and_cdc",
-    stream_timeout_sec: int = 120,
+    stream_timeout_sec: float = 120,
     snapshot_ts_ms: int | None = None,
 ) -> PipelineRunResult:
     """Run one table's pipeline: optional snapshot, then drain the change
-    feed (availableNow) into the same SCD2 target under a checkpoint."""
+    feed (availableNow) into the same SCD2 target under a checkpoint.
+    Raises ``TimeoutError`` when the drain has not finished within
+    ``stream_timeout_sec``."""
     target = f"{work_root.rstrip('/')}/target"
     plan = resolve_snapshot_mode(
         engine,
@@ -201,9 +204,7 @@ def run_file_pipeline(
     q = start_changelog_stream(
         spark, file_source(spark, changelog_dir), payload_schema, cfg
     )
-    q.awaitTermination(stream_timeout_sec)
-    if q.isActive:
-        q.stop()
+    await_replay(q, stream_timeout_sec)
     return PipelineRunResult(full_load=fl, stream_plan=plan, target_path=target)
 
 

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
+from ..streaming.replay import await_replay
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -1289,7 +1290,7 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_replay(q, 120)
     # Simulated double-commit: replay batch 2 (feed file b2.txt, the
     # third micro-batch by pinned mtime order) through the same sink
     # with the SAME batch_id. The idempotent sink overwrites the

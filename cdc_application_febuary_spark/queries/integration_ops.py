@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
+from ..streaming.replay import await_replay, replay_shuffle
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -770,7 +771,6 @@ def pipeline_lifecycle_runner(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..plans.runner import run_connected_pipeline, target_current_state
     from ..sources.connect_config import SourceConnection
-    from .pipeline_ops import _replay_shuffle
 
     cust = load_table(spark, sf_dir, "customer").where(
         F.col("c_custkey") < 200
@@ -853,7 +853,7 @@ def pipeline_lifecycle_runner(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("segment", StringType()),
         ]
     )
-    with _replay_shuffle(spark):
+    with replay_shuffle(spark):
         plan, res = run_connected_pipeline(
             spark,
             pipeline_id="liferunner",
@@ -979,7 +979,6 @@ def multi_pipeline_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
         file_source,
         start_changelog_stream,
     )
-    from .pipeline_ops import _replay_shuffle
 
     cust = load_table(spark, sf_dir, "customer").where(
         F.col("c_custkey") < 120
@@ -1029,7 +1028,7 @@ def multi_pipeline_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
         [StructField("k", LongType()), StructField("bal", DoubleType())]
     )
     queries, cfgs = [], {}
-    with _replay_shuffle(spark):
+    with replay_shuffle(spark):
         for pid, s in specs.items():
             feed = pathlib.Path(work, pid, "feed")
             feed.mkdir(parents=True)
@@ -1081,19 +1080,13 @@ def multi_pipeline_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
                     spark, file_source(spark, str(feed), 1), payload, cfg
                 )
             )
-        for q in queries:
-            q.awaitTermination(120)
-            if q.isActive:
-                # ADVICE r9: a silent q.stop() here truncates the feed on a
-                # contended machine and the failure then surfaces downstream
-                # as an oracle hash mismatch / isolation noise — raise the
-                # actual cause instead.
-                q.stop()
-                raise RuntimeError(
-                    f"pipeline stream {q.name or q.id} still active after"
-                    " 120 s awaitTermination — feed did not drain; aborting"
-                    " instead of truncating (machine contention?)"
-                )
+        try:
+            for q in queries:
+                await_replay(q, 120)
+        finally:  # a raise on the first stream must not orphan the second
+            for q in queries:
+                if q.isActive:
+                    q.stop()
 
     # isolation: each target holds only its own tenant's keys
     for pid, lo, hi in (("p1", 0, 60), ("p2", 60, 120)):
@@ -1225,7 +1218,6 @@ def stream_backpressure_bounded_replay(
         file_source,
         start_changelog_stream,
     )
-    from .pipeline_ops import _replay_shuffle
 
     rows = [
         (int(r["c_custkey"]), float(r["c_acctbal"]))
@@ -1289,7 +1281,7 @@ def stream_backpressure_bounded_replay(
         [StructField("k", LongType()), StructField("bal", DoubleType())]
     )
     cfgs = {}
-    with _replay_shuffle(spark):
+    with replay_shuffle(spark):
         for mode, mft in (("unbounded", None), ("bounded", 1)):
             cfg = StreamConfig(
                 pipeline_id=f"bp_{mode}",
@@ -1302,13 +1294,7 @@ def stream_backpressure_bounded_replay(
             q = start_changelog_stream(
                 spark, file_source(spark, str(feed), mft), payload, cfg
             )
-            q.awaitTermination(120)
-            if q.isActive:
-                q.stop()
-                raise RuntimeError(
-                    f"backpressure replay ({mode}) still active after 120 s"
-                    " — feed did not drain"
-                )
+            await_replay(q, 120)
 
     states = {
         m: target_current_state(spark, cfgs[m].target_path, ["k"]).select(

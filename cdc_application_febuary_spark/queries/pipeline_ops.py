@@ -17,6 +17,7 @@ from ..functions import text as T
 from ..functions.changelog import is_deleted, normalize_op
 from ..functions.lsn import long_to_pg_lsn, pg_lsn_to_long
 from ..operators import dedup, lineage, multimodal, profiling, scd2, similarity
+from ..streaming.replay import await_replay, replay_shuffle
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -30,42 +31,6 @@ def _q(name: str, oracle: str | None = None):
         return fn
 
     return deco
-
-
-import contextlib  # noqa: E402
-
-
-@contextlib.contextmanager
-def _replay_shuffle(spark: SparkSession, n: int | None = None):
-    """Bound the state-store partition count for a file-replay streaming
-    lifecycle query. A FRESH checkpoint pins its state partitioning from
-    ``spark.sql.shuffle.partitions`` at stream start; the replay feeds are
-    sf-bounded (hundreds of KB), so 32 state stores x 4-5 store instances
-    x N micro-batches of per-batch snapshot+delta commits are pure fixed
-    cost (~3x the whole query, measured 20.8 s -> 6.6 s solo on
-    stream_stream_left_outer in r8). r10 re-measured the remaining cost:
-    per-micro-batch addBatch time still scaled with the store count, and
-    2 partitions vs 8 cut the stream phase a further ~2-3x at identical
-    output (A/B'd on stream_stream_left_outer, output hash bit-identical
-    across 8/2 x tmp/tmpfs). State partitioning is invisible to query
-    VALUES (watermarks and aggregations are partitioning-invariant; every
-    replay query is oracle-hashed), so the harness default is the
-    smallest count that still exercises multi-partition state. The
-    PRODUCTION operators inherit the session conf untouched — on a real
-    cluster state partitioning sizes to rate x window as before; only the
-    bench replay harness dials down. Override for experiments via
-    $SPARK_GRAFT_REPLAY_STATE_PARTITIONS or the ``n`` argument.
-    """
-    import os as _os
-
-    if n is None:
-        n = int(_os.environ.get("SPARK_GRAFT_REPLAY_STATE_PARTITIONS", "2"))
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 # ---------------------------------------------------------------------------
@@ -2358,11 +2323,7 @@ def stateful_running_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev.coalesce(1).write.json(feed)
     stream = spark.readStream.schema("event_id long, key string").json(feed)
     out_dir = f"{work}/out"
-    # a fresh checkpoint pins the state-store partition count from the
-    # current shuffle conf; a handful of keys don't need 32 state stores
-    old_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with replay_shuffle(spark):
         q = (
             running_counts(stream.groupBy(F.col("key")))
             .writeStream.foreachBatch(
@@ -2373,9 +2334,7 @@ def stateful_running_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_shuffle)
+        await_replay(q, 120)
     # one row per key per micro-batch; the lifetime total is the max
     return (
         spark.read.parquet(out_dir)
@@ -8093,7 +8052,7 @@ def stream_join_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_replay(q, 120)
     return spark.read.parquet(target).orderBy("o_orderkey")
 
 
@@ -8413,7 +8372,7 @@ def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("w.start").alias("window_start"), "event_type", "cnt"
         )
     )
-    with _replay_shuffle(spark):
+    with replay_shuffle(spark):
         q = (
             stream.writeStream.format("parquet")
             .option("path", target)
@@ -8422,7 +8381,7 @@ def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        await_replay(q, 120)
     return spark.read.parquet(target).orderBy("window_start", "event_type")
 
 
@@ -8625,7 +8584,7 @@ def stateful_totals_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "append"
             ).parquet(target)
 
-        with _replay_shuffle(spark):
+        with replay_shuffle(spark):
             q = (
                 out.writeStream.foreachBatch(sink)
                 .outputMode("update")
@@ -8633,7 +8592,7 @@ def stateful_totals_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .trigger(availableNow=True)
                 .start()
             )
-            q.awaitTermination(180)
+            await_replay(q, 180)
         emitted = spark.read.parquet(target)
         return (
             emitted.groupBy("key")
@@ -8744,7 +8703,7 @@ def stream_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("gap_us"),
     )
     target = f"{work}/target"
-    with _replay_shuffle(spark):
+    with replay_shuffle(spark):
         q = (
             joined.writeStream.format("parquet")
             .option("path", target)
@@ -8753,7 +8712,7 @@ def stream_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        await_replay(q, 120)
     return (
         spark.read.parquet(target)
         .groupBy("user_id")
@@ -8839,7 +8798,7 @@ def stream_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream, keys=["event_id"], ts_col="ts", watermark="90 days"
     )
     target = f"{work}/target"
-    with _replay_shuffle(spark):
+    with replay_shuffle(spark):
         q = (
             deduped.writeStream.format("parquet")
             .option("path", target)
@@ -8848,7 +8807,7 @@ def stream_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        await_replay(q, 120)
     return (
         spark.read.parquet(target)
         .groupBy("event_type")
@@ -9369,7 +9328,7 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("gap_us"),
     )
     target = f"{work}/target"
-    with _replay_shuffle(spark):
+    with replay_shuffle(spark):
         q = (
             joined.writeStream.format("parquet")
             .option("path", target)
@@ -9378,7 +9337,7 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(180)
+        await_replay(q, 180)
     return (
         spark.read.parquet(target)
         .where(F.col("user_id") >= 0)
@@ -10049,14 +10008,14 @@ def stream_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"{target}/__batch_id={int(batch_id)}"
             )
 
-    with _replay_shuffle(spark):
+    with replay_shuffle(spark):
         q = (
             stream.writeStream.foreachBatch(gate)
             .option("checkpointLocation", f"{work}/ckpt")
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        await_replay(q, 120)
         # replay a committed batch (b1 -> batch_id 1): the idempotent sink
         # must leave the target byte-equivalent, or committed_rows drifts
         replay = (
@@ -10760,12 +10719,12 @@ def stream_session_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
     use_rocksdb_state(spark)
     target = f"{work}/target"
     try:
-        # n=8 pinned: unlike the machinery-bound replays (which sped up
-        # ~1.3-1.7x at n=2, r10 probe), this query does REAL per-partition
-        # Python state work (transformWithState session processor over
-        # every user's open sessions) — at n=2 that serializes into two
-        # tasks and measured 1.35x SLOWER (isolated interleaved min-of-5)
-        with _replay_shuffle(spark, 8):
+        # n=4 pinned: this query does real per-partition Python state work
+        # (transformWithState session processor over every user's open
+        # sessions), so one state partition per core beats the harness
+        # default. Interleaved min-of-5 at sf0.1 on 4 cores: n=4 vs n=8
+        # 0.75x wall / 0.72x CPU; n=2 vs n=4 1.10x wall / 0.82x CPU.
+        with replay_shuffle(spark, 4):
             out = session_windows_tws(
                 stream.groupBy("user_id"), gap_ms=3_600_000
             )
@@ -10777,7 +10736,7 @@ def stream_session_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .trigger(availableNow=True)
                 .start()
             )
-            q.awaitTermination(180)
+            await_replay(q, 180)
     finally:
         if prev_provider is not None:
             spark.conf.set(
@@ -10959,7 +10918,7 @@ def stream_state_metrics_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     n_files = len(bounds) + 2
-    with _replay_shuffle(spark):
+    with replay_shuffle(spark):
         q = (
             stream.writeStream.format("parquet")
             .option("path", f"{work}/target")
@@ -10968,7 +10927,7 @@ def stream_state_metrics_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        await_replay(q, 120)
         progress = list(q.recentProgress)
     rows = []
     for p in progress:
@@ -11142,7 +11101,7 @@ def stream_windowed_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("w.start").alias("ws"), "hll")
     )
     target = f"{work}/target"
-    with _replay_shuffle(spark):
+    with replay_shuffle(spark):
         q = (
             stream.writeStream.format("parquet")
             .option("path", target)
@@ -11151,7 +11110,7 @@ def stream_windowed_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        await_replay(q, 120)
     blobs = spark.read.parquet(target)
     est = blobs.select(
         "ws", F.hll_sketch_estimate("hll").alias("est")

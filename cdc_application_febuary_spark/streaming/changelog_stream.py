@@ -31,6 +31,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from ..functions.changelog import decode_debezium
+from .replay import await_replay
 
 
 @dataclass
@@ -198,12 +199,11 @@ def run_file_changelog_pipeline(
     source_dir: str,
     payload_schema: StructType,
     cfg: StreamConfig,
-    timeout_sec: int = 120,
+    timeout_sec: float = 120,
 ) -> None:
     """Convenience: run the file-source pipeline to completion
-    (availableNow) — the test/replay path."""
+    (availableNow) — the test/replay path. Raises ``TimeoutError`` when
+    the stream has not finished within ``timeout_sec``."""
     raw = file_source(spark, source_dir, cfg.max_files_per_trigger)
     q = start_changelog_stream(spark, raw, payload_schema, cfg)
-    q.awaitTermination(timeout_sec)
-    if q.isActive:
-        q.stop()
+    await_replay(q, timeout_sec)

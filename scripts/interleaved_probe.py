@@ -10,7 +10,10 @@ between them (A q s1, B q s1, A q s2, ...), so both sides see the same
 machine weather sample-by-sample while never running concurrently.
 Worker mode serves one repo: reads query names on stdin, runs
 build-plan + noop-sink write (bench.py's harness), prints one JSON
-timing line per request.
+timing line per request: wall seconds, and the CPU seconds of the
+worker's Spark driver JVM with its Python workers plus the worker's own
+PySpark driver process (the process tree read from /proc, the same
+count the benchmark gates on). Each side reports min-of-N for both.
 
 Usage:
   git worktree add /tmp/r5tree <old-commit>
@@ -32,6 +35,33 @@ from pathlib import Path
 import pandas as pd
 
 HERE = Path(__file__).resolve().parent.parent
+
+
+def _tree_cpu_s(root_pid: int) -> float:
+    """CPU seconds (user + system) of a process and all its descendants,
+    including the children they have already reaped (exited Python
+    workers)."""
+    kids: dict = {}
+    for d in os.listdir("/proc"):
+        if not d.isdigit():
+            continue
+        try:
+            with open(f"/proc/{d}/stat") as f:
+                ppid = int(f.read().rsplit(")", 1)[1].split()[1])
+        except (OSError, IndexError, ValueError):
+            continue
+        kids.setdefault(ppid, []).append(int(d))
+    ticks, todo = 0, [root_pid]
+    while todo:
+        pid = todo.pop()
+        todo += kids.get(pid, [])
+        try:
+            with open(f"/proc/{pid}/stat") as f:
+                fields = f.read().rsplit(")", 1)[1].split()
+            ticks += sum(int(v) for v in fields[11:15])  # utime stime cutime cstime
+        except (OSError, IndexError, ValueError):
+            continue
+    return ticks / os.sysconf("SC_CLK_TCK")
 
 
 def worker(repo: str) -> None:
@@ -61,17 +91,23 @@ def worker(repo: str) -> None:
     import __spark_entry__ as E
 
     qs = E.queries()
+    jvm_pid = spark.sparkContext._gateway.proc.pid
+
+    def cpu_s() -> float:
+        return _tree_cpu_s(jvm_pid) + time.process_time()
+
     print(json.dumps({"ready": True, "repo": repo_p}), flush=True)
     for line in sys.stdin:
         name = line.strip()
         if not name:
             break
-        t0 = time.time()
+        t0, c0 = time.time(), cpu_s()
         try:
             df = qs[name](spark, sf_dir)
             df.write.mode("overwrite").format("noop").save()
             sec = round(time.time() - t0, 4)
-            print(json.dumps({"q": name, "sec": sec}), flush=True)
+            cpu = round(cpu_s() - c0, 3)
+            print(json.dumps({"q": name, "sec": sec, "cpu_s": cpu}), flush=True)
         except Exception as e:
             print(json.dumps({"q": name, "err": str(e)[:400]}), flush=True)
     spark.stop()
@@ -140,6 +176,9 @@ def main() -> None:
     samples: dict[str, dict[str, list[float]]] = {
         q: {k: [] for k in sides} for q in args.queries
     }
+    cpu: dict[str, dict[str, list[float]]] = {
+        q: {k: [] for k in sides} for q in args.queries
+    }
     for i in range(args.runs):
         for q in args.queries:
             for k in procs:
@@ -147,11 +186,16 @@ def main() -> None:
                 if "err" in d:
                     print(f"[{k}] {q}: ERROR {d['err']}", file=sys.stderr)
                     samples[q][k].append(-1.0)
+                    cpu[q][k].append(-1.0)
                 else:
                     samples[q][k].append(d["sec"])
+                    cpu[q][k].append(d["cpu_s"])
             print(
                 f"sample {i + 1}/{args.runs} {q}: "
-                + " ".join(f"{k}={samples[q][k][-1]}" for k in procs),
+                + " ".join(
+                    f"{k}={samples[q][k][-1]}s/{cpu[q][k][-1]}cpu"
+                    for k in procs
+                ),
                 file=sys.stderr,
             )
     for p in procs.values():
@@ -160,24 +204,34 @@ def main() -> None:
             p.wait(timeout=60)
         except Exception:
             p.kill()
-    verdict = {}
-    for q in args.queries:
+
+    def mins_and_ratio(by_side: dict) -> tuple:
         # ADVICE r9: min over POSITIVE samples only — one transient -1.0
         # error sample must not discard the remaining valid samples.
         mins = {
             k: (min(good) if (good := [s for s in v if s > 0]) else None)
-            for k, v in samples[q].items()
+            for k, v in by_side.items()
         }
         ratio = (
             round(mins["new"] / mins["old"], 3)
             if mins["new"] and mins["old"]
             else None
         )
+        return mins, ratio
+
+    verdict = {}
+    for q in args.queries:
+        mins, ratio = mins_and_ratio(samples[q])
+        cpu_mins, cpu_ratio = mins_and_ratio(cpu[q])
         verdict[q] = {
             "min_new": mins["new"],
             "min_old": mins["old"],
             "ratio_new_over_old": ratio,
             "samples": samples[q],
+            "min_cpu_new": cpu_mins["new"],
+            "min_cpu_old": cpu_mins["old"],
+            "cpu_ratio_new_over_old": cpu_ratio,
+            "cpu_samples": cpu[q],
         }
     print(json.dumps(verdict, indent=1))
 

@@ -96,6 +96,31 @@ def test_cdc_only_lifecycle_skips_snapshot(spark, tmp_path):
     assert target.where(F.col("__op") == "r").count() == 0
 
 
+def test_file_pipeline_raises_when_the_stream_does_not_finish(spark, tmp_path):
+    """An over-time drain raises instead of returning a partial target, and
+    leaves no stream running."""
+    import pytest
+
+    feed = tmp_path / "feed"
+    feed.mkdir()
+    (feed / "c.json").write_text(_env("c", None, {"id": 9, "name": "z"}, 100) + "\n")
+    with pytest.raises(TimeoutError):
+        run_file_pipeline(
+            spark,
+            pipeline_id="lifecycle_timeout",
+            source=None,
+            changelog_dir=str(feed),
+            payload_schema=PAYLOAD,
+            work_root=str(tmp_path / "wk"),
+            mode="cdc_only",
+            # no micro-batch plans, writes and commits within a millisecond
+            stream_timeout_sec=0.001,
+        )
+    assert all(
+        q.name != "changelog-lifecycle_timeout" for q in spark.streams.active
+    )
+
+
 def test_connected_pipeline_config_topics_pattern_roundtrip(spark, tmp_path):
     """VERDICT r3 item 5 — the start_pipeline composition: ONE call yields
     the Debezium connector config, the change topics, and the Spark

@@ -174,3 +174,23 @@ def test_health_thresholds(spark):
     ).collect()
     assert [r["lag"] for r in out] == ["normal", "warning", "critical", "critical"]
     assert [r["slot"] for r in out] == ["normal", "warning", "critical", "stuck"]
+
+
+def test_file_changelog_pipeline_raises_on_timeout(spark, tmp_path):
+    """A stream that does not drain in time raises instead of returning a
+    partial target, and is stopped."""
+    import pytest
+
+    feed = tmp_path / "feed"
+    _write_feed(feed, [_envelope("c", None, {"id": 1, "name": "a"}, 1000)])
+    cfg = StreamConfig(
+        pipeline_id="p_timeout",
+        target_path=str(tmp_path / "target"),
+        event_log_path=str(tmp_path / "event_log"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        # a processing-time trigger never finishes on its own
+        trigger={"processingTime": "1 second"},
+    )
+    with pytest.raises(TimeoutError):
+        run_file_changelog_pipeline(spark, str(feed), PAYLOAD, cfg, timeout_sec=1)
+    assert all(q.name != "changelog-p_timeout" for q in spark.streams.active)
